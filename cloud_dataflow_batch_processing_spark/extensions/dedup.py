@@ -195,7 +195,8 @@ def minhash_near_dup_pairs(
       shingle arrays, and the store is reusable across invocations
       (the incremental/repeated-dedup path). Bands take the
       ReuseExchange posture. A/B vs cache/checkpoint at 500k/5M in
-      NOTES.md (scripts/exp_minhash_bucketed.py).
+      NOTES.md; re-run with ``scripts/scale_curve.py --points 500k,5m
+      --ops minhash --modes cache,checkpoint,bucketed``.
     """
     # Staged plan — each expensive array is computed once per row:
     #   stage 1: char-fold token hashes   (the dominant cost)
@@ -210,8 +211,8 @@ def minhash_near_dup_pairs(
         # the store's bucket distribution, so the shingle arrays never
         # re-exchange (the narrow candidate side co-partitions to the
         # bucket count instead). Mirrors substring.py's span store;
-        # A/B vs cache/checkpoint in scripts/exp_minhash_bucketed.py,
-        # adoption decision in NOTES.md.
+        # A/B vs cache/checkpoint: scripts/scale_curve.py --ops minhash
+        # --modes cache,checkpoint,bucketed; adoption decision in NOTES.md.
         import os
         import uuid
 

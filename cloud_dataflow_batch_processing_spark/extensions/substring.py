@@ -223,8 +223,9 @@ def _dup_spans(
         # sorts). Net vs 'checkpoint' at the 5M point: the join-side
         # exchange+sort of the full span frame is traded for a
         # write-side repartition that pipelines with the parquet
-        # encode. Measured A/B lives in scripts/exp_substring_bucketed
-        # .py; adoption decision recorded in NOTES.md.
+        # encode. Measured A/B: scripts/scale_curve.py --points 500k,5m
+        # --ops substring --modes cache,checkpoint,bucketed; adoption
+        # decision recorded in NOTES.md.
         if not scratch_dir:
             raise ValueError("materialize='bucketed' needs scratch_dir")
         import os

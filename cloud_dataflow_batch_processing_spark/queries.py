@@ -61,70 +61,66 @@ def register(
     return deco
 
 
-# Driver-window rotation (round 12), produced mechanically by
-# scripts/rotate_window.py: every registry name is now driver-certified
-# at least once (147/147 union through r11), so the ranking is purely
-# least-recently-certified — the cohort whose last cert is r9/r10
-# (avro_roundtrip_agg and the broadcast/cdc/cogroup/combine names that
-# r11's comment deferred, the element-wise/text utility family, the
-# approx-sketch family, window_global/_session/_sliding), ties
-# alphabetical. Queries this optimization round TOUCHES that sit
-# in-window (semantic_kmeans_assign_arrow, avro_roundtrip_agg,
-# text_quality_filter, corpus_clean_pipeline) get their changed plans
-# re-certified by the driver immediately. Overlap with
-# CORRECTNESS_r11.json is 0 <= 25, so the rotation gate
-# (tests/test_window_rotation.py) is green.
+# DRIVER_WINDOW rotation, produced mechanically by
+# scripts/rotate_window.py --write: every registry name has passed the
+# external correctness gate at least once, so the ranking is purely
+# least-recently-certified, ties alphabetical. None of these 50 names
+# is in CORRECTNESS_r12.json: 47 were last certified in r10 (the
+# corpus/dedup/TPC-H/window families that r11 and r12 rotated past)
+# and the last 3 (ann_brute_topk, ann_ivf_topk, ann_lsh_buckets) in
+# r11. Overlap with CORRECTNESS_r12.json is 0 <= 25, so the rotation
+# gate (tests/test_window_rotation.py) is green.
 DRIVER_WINDOW: tuple[str, ...] = (
-    "ann_lsh_pairs",
-    "approx_distinct",
-    "approx_distinct_hll",
-    "approx_percentile",
-    "asof_join_events",
-    "avro_roundtrip_agg",
-    "broadcast_dim_join",
-    "cdc_merge_orders",
-    "cogroup_by_key",
-    "combine_fn_udaf",
-    "combine_globally",
-    "corpus_clean_pipeline",
-    "corpus_mix_sample",
-    "count_per_element",
-    "decontaminate_eval_overlap",
-    "dedup_duplicate_clusters",
-    "dedup_embedding_cosine",
-    "dedup_minhash_pairs",
-    "dedup_minhash_signature",
-    "dedup_near_exact_keep",
-    "dedup_ngram_jaccard",
-    "distinct_values",
-    "events_json_extract",
-    "group_by_key_lists",
-    "group_mean",
-    "group_normalize_zscore",
-    "intersect_except",
-    "kv_swap",
-    "sample_deterministic",
-    "sample_per_key_deterministic",
-    "semantic_kmeans_assign_arrow",
-    "table_fingerprint",
-    "text_chunks",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_normalize_nfc",
-    "text_quality_filter",
-    "text_token_stats",
-    "to_dict_global",
-    "top_n_global",
-    "top_n_per_key",
-    "union_all",
-    "union_distinct",
-    "unpivot_roundtrip",
-    "window_global",
-    "window_session",
-    "window_sliding",
-    "approx_distinct_hll_by_type",
-    "approx_quantile_histogram",
-    "bloom_decontaminate",
+    "boilerplate_ngrams",
+    "corpus_audit_report",
+    "corpus_build_full",
+    "corpus_mix_temperature",
+    "corpus_split_train_val",
+    "dedup_exact",
+    "dedup_incremental_minhash",
+    "dedup_minhash_pairs_fast",
+    "dedup_quality_survivor",
+    "dedup_segments",
+    "dedup_simhash",
+    "dq_violation_summary",
+    "embedding_normalize_quantize",
+    "filter_project",
+    "flagship_group_sum",
+    "flat_map_explode",
+    "funnel_signup_click_purchase",
+    "fuzzy_match_part_names",
+    "group_count_distinct",
+    "grouping_sets_rollup",
+    "heavy_hitters_countmin",
+    "incremental_rollup_orders",
+    "json_roundtrip_agg",
+    "multi_table_join_chain",
+    "multimodal_decode_features",
+    "pack_sequences",
+    "pagerank_supplier_customer",
+    "partition_route",
+    "percentiles_exact",
+    "pii_scrub_stats",
+    "q18_large_volume_customers",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "range_join_events",
+    "retention_cohorts",
+    "scd2_user_event_history",
+    "semantic_dedup_prune",
+    "semantic_kmeans_assign",
+    "sessionize_events",
+    "snapshot_diff_orders",
+    "substring_dedup_stats",
+    "text_profile_single_pass",
+    "unigram_lm_quality",
+    "vocab_coverage_curve",
+    "window_rank_analytics",
+    "window_tumbling",
+    "ann_brute_topk",
+    "ann_ivf_topk",
+    "ann_lsh_buckets",
 )
 
 

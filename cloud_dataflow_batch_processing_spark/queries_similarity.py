@@ -210,8 +210,7 @@ def embedding_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_kmeans_assign",
     oracle=S.kmeans_assign_sql(k=8, iters=2),
     # Driver-certified r9; demoted late=True in r11 (50-primary budget):
-    # the k-means class stays primary via semantic_dedup_prune and the
-    # production Arrow twin semantic_kmeans_assign_arrow (late, r9).
+    # the k-means class stays primary via semantic_dedup_prune.
     late=True,
 )
 def semantic_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,34 +221,15 @@ def semantic_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory (seeded centroids, decimal-exact updates, tie-broken
     argmin) is certified per-row, not just the final counts.
 
-    r12 (VERDICT r11 #8): ships the ARROW assign path (broadcast
-    k×dim matrix + Arrow-batched numpy argmin — the plan the scale
-    posture requires, ~3x faster here). Values are bit-identical to
-    the literal-expression path by construction, and the literal path
+    Ships the ARROW assign path (broadcast k×dim matrix + Arrow-batched
+    numpy argmin — plan size O(1) in k, the plan the scale posture
+    requires, ~3x faster than the literal path). Values are
+    bit-identical to the literal-expression path by construction (same
+    binary64 op order, see extensions/similarity._argmin_arrow). This
+    entry certifies the Arrow path against the oracle; the literal path
     keeps its own oracle certification in
     tests/test_kmeans.py::test_literal_assign_path_matches_oracle
-    (dualscale) plus the always-on expr-vs-arrow equality test — the
-    twin proof VERDICT r11 #8 asked to preserve."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.kmeans_assign(emb, k=8, iters=2, assign_method="arrow")
-
-
-@register(
-    "semantic_kmeans_assign_arrow",
-    # Same trajectory oracle as semantic_kmeans_assign — certifies that
-    # the broadcast-matrix Arrow argmin (the large-k scale path) is
-    # bit-identical to the literal-expression path; registers late.
-    oracle=S.kmeans_assign_sql(k=8, iters=2),
-    late=True,
-)
-def semantic_kmeans_assign_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd k-means with ``assign_method="arrow"``: centroids ship as
-    ONE broadcast k×dim numpy matrix and every assignment is an
-    Arrow-batched numpy argmin, so plan size is O(1) in k instead of
-    O(k×dim) literals — the path SemDeDup-realistic k (10k–100k
-    clusters) requires. Same binary64 op order as the literal path
-    (see extensions/similarity._argmin_arrow), hence the identical
-    full-trajectory oracle."""
+    (dualscale) plus the always-on expr-vs-arrow equality test."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     return S.kmeans_assign(emb, k=8, iters=2, assign_method="arrow")
 
@@ -265,11 +245,12 @@ def semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_kept). Candidate generation is bucketed by cluster id — the same
     bounded-bucket self-join shape as the LSH pipelines, never
     all-pairs. assign_method="arrow": bit-identical to the literal-
-    expression path (the semantic_kmeans_assign / _arrow twin pair
-    certifies both against ONE oracle) and the SemDeDup-realistic
-    posture (k grows to 10k-100k clusters, where the literal plan is
-    impossible); at sf0.1 it cut the three interpreted-HOF assignment
-    passes from ~5 s to ~1.5 s (r11, guide §4)."""
+    expression path (tests/test_kmeans.py::
+    test_semantic_dedup_arrow_identical compares the two) and the
+    SemDeDup-realistic posture (k grows to 10k-100k clusters, where
+    the literal plan is impossible); at sf0.1 it cut the three
+    interpreted-HOF assignment passes from ~5 s to ~1.5 s (r11,
+    guide §4)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     return S.semantic_dedup_stats(
         emb, k=8, iters=2, min_cosine=0.9, assign_method="arrow"

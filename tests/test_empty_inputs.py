@@ -47,7 +47,6 @@ CONTRACT_ERRORS = {
     "ann_brute_topk": "probe",
     "ann_ivf_topk": "probe",
     "semantic_kmeans_assign": "k-means",
-    "semantic_kmeans_assign_arrow": "k-means",
     "semantic_dedup_prune": "k-means",
 }
 

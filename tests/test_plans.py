@@ -4,6 +4,8 @@ pruning, broadcast choice, shuffle counts — regressions here are
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,7 @@ from cloud_dataflow_batch_processing_spark.plans import (
     assert_pushed_filters,
     assert_read_schema_pruned,
     count_shuffles,
+    fan_out_scan,
 )
 from cloud_dataflow_batch_processing_spark.queries import REGISTRY, queries
 
@@ -583,6 +586,35 @@ def test_no_cartesian_anywhere_in_registry(spark, sf_dir):
     assert not offenders, offenders
 
 
+def canonical_plan(df) -> str:
+    """The optimized logical plan with run-specific names removed:
+    lambda-variable counters (``x_12#``), expression ids (``#480``) and
+    12+ hex-digit runs (scratch paths, uuids)."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"(lambda \w+?)_\d+#", r"\1_#", s)
+    s = re.sub(r"#\d+", "#", s)
+    return re.sub(r"[0-9a-f]{12,}", "<hex>", s)
+
+
+@pytest.mark.slowsweep
+def test_no_two_registry_entries_share_a_plan(spark, sf_dir):
+    """A registry entry whose canonical optimized plan equals another's
+    certifies nothing new: the oracle gate runs the same query twice.
+    Twins that differ in plan (e.g. the HOF fold vs the Arrow UDF of
+    dedup_minhash_pairs / _fast) stay."""
+    from cloud_dataflow_batch_processing_spark.caching import release_managed_caches
+
+    seen: dict[str, str] = {}
+    dupes = []
+    for name, q in sorted(REGISTRY.items()):
+        plan = canonical_plan(q.fn(spark, sf_dir))
+        release_managed_caches()
+        if plan in seen:
+            dupes.append((seen[plan], name))
+        seen.setdefault(plan, name)
+    assert not dupes, dupes
+
+
 def test_runtime_bloom_filter_injects_at_scale_thresholds(spark, sf_dir):
     """100 TB scale story: Spark's InjectRuntimeFilter adds a bloom-
     filter semi-join reduction to the FACT side of a selective dim
@@ -633,3 +665,20 @@ def test_composed_pipeline_shuffle_count_is_truthful(spark, sf_dir):
         # a phantom-free count is small AND nonzero (the walk must
         # reach through the cache boundaries, not stop at the scans)
         assert 2 <= got <= budget, (name, got, budget)
+
+
+def test_fan_out_scan_min_bytes_gate(spark, tmp_path):
+    """fan_out_scan(min_bytes=) gates on the optimizer's size estimate:
+    below the threshold the scan comes back unchanged; above it a
+    1-partition scan gets a hash repartition on the key."""
+    path = str(tmp_path / "one_split")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert fan_out_scan(df, "id", min_bytes=est + 1) is df
+    fanned = fan_out_scan(df, "id", min_bytes=1)
+    plan = fanned._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression [id" in plan, plan
+    assert fanned.rdd.getNumPartitions() == min(spark.sparkContext.defaultParallelism, est)
+    assert sorted(r.id for r in fanned.collect()) == list(range(100))

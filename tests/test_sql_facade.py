@@ -196,7 +196,6 @@ TRANSLATED_CERTIFIED = [
     "rolling_avg_events",
     "semantic_dedup_prune",
     "semantic_kmeans_assign",
-    "semantic_kmeans_assign_arrow",
     "sessionize_events",
     "streaming_lsh_dedup",
     "substring_dedup_clean",
